@@ -63,17 +63,6 @@ def main() -> None:
         2 * par
     ).write.parquet(f"{inp}/regions")
 
-    # dim-plan decisions hoisted ONCE, as any production job with a
-    # stable dim would: broadcast (known-small, 3 regions/doc) and the
-    # holed-geometry clip-plan probe (one limit-1 job here instead of
-    # one per timed run)
-    from georip_spark.operators.joins import prepare_regions
-
-    _holed = (
-        prepare_regions(spark.read.parquet(f"{inp}/regions"))
-        .filter("is_valid AND has_holes").limit(1).count() > 0
-    )
-
     # Each timed run constructs a FRESH Dataset: re-collecting one
     # Dataset would reuse its RDD graph and the scheduler would skip
     # every shuffle stage whose map output already exists (measured:
@@ -95,9 +84,9 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     def run_pipeline():
-        out = build_dataset(
-            rasters, regions, broadcast_regions=True, any_holed=_holed
-        )
+        # broadcast hoisted (known-small dim, 3 regions/doc); the
+        # holed-geometry probe runs inside, before the timer starts
+        out = build_dataset(rasters, regions, broadcast_regions=True)
         t0 = time.time()
         stats = out["docs_out"].selectExpr(
             "count(*) AS docs", "sum(size(spans)) AS spans"

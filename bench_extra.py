@@ -61,7 +61,6 @@ def main() -> None:
     if args.pipeline:
         from georip_spark import synth
         from georip_spark.pipeline import build_dataset
-        from georip_spark.operators.joins import prepare_regions
         import shutil
         import tempfile
 
@@ -73,17 +72,12 @@ def main() -> None:
             2 * par).write.parquet(f"{inp}/regions")
         rasters = spark.read.parquet(f"{inp}/rasters")
         regions = spark.read.parquet(f"{inp}/regions")
-        holed = (
-            prepare_regions(regions)
-            .filter("is_valid AND has_holes").limit(1).count() > 0
-        )
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         times = []
         spans = 0
         for i in range(args.n + 1):  # +1 warm
             spark.sparkContext.setJobDescription(f"pipeline run {i}")
-            o = build_dataset(rasters, regions, broadcast_regions=True,
-                              any_holed=holed)
+            o = build_dataset(rasters, regions, broadcast_regions=True)
             t0 = time.time()
             st = o["docs_out"].selectExpr(
                 "count(*) AS docs", "sum(size(spans)) AS spans").collect()[0]

@@ -1,17 +1,19 @@
 """General polygon ∩ tile-rect clip + normalize as PURE Catalyst
 column math — the whole-stage JVM replacement for the Arrow clip
-kernel on arbitrary (hole-free) polygons, not just rectangles.
+kernel on every polygon shape (rectangles closed-form, hole-free
+and holed polygons by Sutherland–Hodgman), plus ``clip_coords``, the
+CASE that picks the arm per joined row.
 
 Why: the N→4N scaling profile (jobs/scaling_profile.py, NOTES.md)
 shows the Arrow/Python lane is the one part of the hot stage that
 does not scale with cores — its effective bandwidth saturates while
 pure-JVM stages track the hardware ceiling. The rect fast path
-(pipeline._rect_clip_coords) removed ArrowEvalPython for canonical
-rectangles (~40% of the synth corpus); this module removes it for
-EVERY hole-free geometry by re-expressing kernels.clip_ring_to_rect
+(_rect_clip_coords) removed ArrowEvalPython for canonical
+rectangles (~40% of the synth corpus); the S-H paths remove it for
+every other geometry by re-expressing kernels.clip_ring_to_rect
 (Sutherland–Hodgman against an axis-aligned window) with Spark
-higher-order functions over per-part shell arrays parsed once on the
-dim side (geom_udfs.geom_bounds emits `shells`).
+higher-order functions over per-part shell (or, for holed rows,
+nested ring) arrays parsed once on the dim side.
 
 Bit-compatibility contract with the kernel (the e2e oracle and the
 hybrid plan both demand row-identical output):
@@ -46,6 +48,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from georip_spark.exprcache import cached_column
 
 _EPS64 = 2.220446049250313e-16  # np.finfo(float64).eps
 _TWO52 = 4503599627370496.0  # 2^52
@@ -342,4 +346,81 @@ def clip_normalize_coords_mp(
             acc.isNotNull(),
             _norm_closed_ring(acc["ring"], minx, maxy, w, h),
         ),
+    )
+
+
+def _rect_clip_coords() -> Column:
+    """JVM fast path for the clip+normalize of an axis-aligned
+    rectangle region (``is_rect_blccw``) against the tile rect — the
+    whole-stage-codegen replacement for the Arrow clip kernel on the
+    hot path (UDFs are the slow lane; rectangle labels are the
+    dominant case in the contract workload).
+
+    Bit-compatibility with ``geom_udfs.clip_and_normalize``:
+    - intersection corners are the same greatest/least IEEE ops the
+      Sutherland–Hodgman crossings snap to (kernels.py:158);
+    - the vertex ORDER reproduces S-H exactly — BL-start when the
+      region's bottom edge survives, BR-start when it is clipped
+      (property-swept vs the kernel on 2.8k random overlapping
+      rect pairs: 0 mismatches, including empties and the zero-area
+      floor) — the same rule the driver oracle encodes in _q31_sql;
+    - the ring-local zero-area floor (4·n·eps·max(1,ext)², n=5) and
+      np.round's binary HALF_EVEN are mirrored exactly.
+
+    Expects tile bbox (minx/miny/maxx/maxy) and region bbox
+    (g_minx/g_miny/g_maxx/g_maxy) columns; null when the intersection
+    is empty/degenerate (same contract as the kernel)."""
+    ix0 = F.greatest(F.col("g_minx"), F.col("minx"))
+    ix1 = F.least(F.col("g_maxx"), F.col("maxx"))
+    iy0 = F.greatest(F.col("g_miny"), F.col("miny"))
+    iy1 = F.least(F.col("g_maxy"), F.col("maxy"))
+    iw = ix1 - ix0
+    ih = iy1 - iy0
+    m = F.greatest(F.lit(1.0), F.greatest(iw, ih))
+    tol = F.lit(20.0 * _EPS64) * m * m
+    w = F.col("maxx") - F.col("minx")
+    h = F.col("maxy") - F.col("miny")
+    uL = round6_even(_clip01((ix0 - F.col("minx")) / w))
+    uR = round6_even(_clip01((ix1 - F.col("minx")) / w))
+    vB = round6_even(_clip01((F.col("maxy") - iy0) / h))
+    vT = round6_even(_clip01((F.col("maxy") - iy1) / h))
+    bl = F.array(uL, vB, uR, vB, uR, vT, uL, vT, uL, vB)
+    br = F.array(uR, vB, uR, vT, uL, vT, uL, vB, uR, vB)
+    nonempty = (ix1 > ix0) & (iy1 > iy0) & (iw * ih > tol)
+    return F.when(
+        nonempty,
+        F.when(F.col("g_miny") >= F.col("miny"), bl).otherwise(br),
+    )
+
+
+def clip_coords(holed: bool) -> Column:
+    """The clip arm of every joined (tile × region) row, all JVM:
+    canonical rectangles take the closed-form rect path, every other
+    hole-free geometry the S-H over its ``shells``; with ``holed``
+    (some valid region has holes) holed rows take the hole-aware S-H
+    over the nested ``rings`` — a three-way CASE instead of two-way.
+
+    Reads the tile bbox (minx/miny/maxx/maxy), the region bbox
+    (g_minx/g_miny/g_maxx/g_maxy), is_rect_blccw, shells and — when
+    ``holed`` — has_holes and rings. The arms are built from FIXED
+    column names, so the (py4j-built, expensive) trees are memoized —
+    see the exprcache module docstring for the driver seconds this
+    saves on every re-plan."""
+    tile = (F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"))
+    g_bbox = (F.col("g_minx"), F.col("g_miny"), F.col("g_maxx"), F.col("g_maxy"))
+    fast = cached_column(("pipeline.rect_clip",), _rect_clip_coords)
+    gen = cached_column(
+        ("pipeline.gen_clip",),
+        lambda: clip_normalize_coords(F.col("shells"), *tile, g_bbox=g_bbox),
+    )
+    if not holed:
+        return F.when(F.col("is_rect_blccw"), fast).otherwise(gen)
+    gen_mp = cached_column(
+        ("pipeline.gen_clip_mp",),
+        lambda: clip_normalize_coords_mp(F.col("rings"), *tile, g_bbox=g_bbox),
+    )
+    return (
+        F.when(F.col("is_rect_blccw"), fast)
+        .when(~F.col("has_holes"), gen)
+        .otherwise(gen_mp)
     )

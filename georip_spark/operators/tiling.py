@@ -68,16 +68,11 @@ def tile_grid(
     ).withColumn(
         "tile_col", F.explode(F.sequence(F.lit(0), F.col("width") - 1, F.col("stride")))
     )
-    # row-major ordinal (loop order of the reference): row index * ncols + col index
-    ncols = F.ceil(F.col("width") / F.col("stride")).cast("int")
     df = df.select(
         "doc_id",
         "tile_row",
         "tile_col",
-        F.least(F.col("tile_size"), F.col("width") - F.col("tile_col")).alias("tile_w"),
-        F.least(F.col("tile_size"), F.col("height") - F.col("tile_row")).alias("tile_h"),
-        ((F.col("tile_row") / F.col("stride")).cast("int") * ncols
-         + (F.col("tile_col") / F.col("stride")).cast("int")).alias("ordinal"),
+        *tile_window(F.col("tile_row"), F.col("tile_col")),
         GF.tile_media_ref(F.col("doc_id"), F.col("tile_row"), F.col("tile_col")).alias("media_ref"),
         "transform",
         "tile_size",
@@ -86,6 +81,22 @@ def tile_grid(
     if with_footprint:
         df = with_footprint_bbox(df)
     return df.drop("transform")
+
+
+def tile_window(tile_row: Column, tile_col: Column) -> list[Column]:
+    """The window law of the tile at pixel offset (tile_row, tile_col),
+    as the columns ``tile_w``, ``tile_h``, ``ordinal``: edge windows
+    clamp to the raster (``min(tile_size, width - col)``), and the
+    ordinal is row-major in the reference's loop order (row index ×
+    ncols + col index). Reads the raster's width, height, tile_size
+    and stride columns."""
+    ncols = F.ceil(F.col("width") / F.col("stride")).cast("int")
+    return [
+        F.least(F.col("tile_size"), F.col("width") - tile_col).alias("tile_w"),
+        F.least(F.col("tile_size"), F.col("height") - tile_row).alias("tile_h"),
+        ((tile_row / F.col("stride")).cast("int") * ncols
+         + (tile_col / F.col("stride")).cast("int")).alias("ordinal"),
+    ]
 
 
 def with_footprint_bbox(tiles: DataFrame) -> DataFrame:

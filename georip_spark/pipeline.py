@@ -16,7 +16,7 @@ vs the pandas oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from georip_spark import functions as GF
@@ -28,7 +28,11 @@ from georip_spark.operators.joins import (
     prepare_regions,
     spatial_join_tiles_regions,
 )
-from georip_spark.operators.tiling import tile_grid, with_footprint_bbox
+from georip_spark.operators.tiling import (
+    tile_grid,
+    tile_window,
+    with_footprint_bbox,
+)
 
 DEFAULT_CLASSES = ("Treatment", "Background")
 
@@ -106,15 +110,11 @@ def tiles_from_docs(docs: DataFrame, rasters: DataFrame) -> DataFrame:
     ).filter(F.col("span.kind") == "media")
     tile_row = F.regexp_extract(F.col("span.media_ref"), _TILE_REF_RE, 1).cast("int")
     tile_col = F.regexp_extract(F.col("span.media_ref"), _TILE_REF_RE, 2).cast("int")
-    ncols = F.ceil(F.col("width") / F.col("stride")).cast("int")
     tiles = m.select(
         "doc_id",
         tile_row.alias("tile_row"),
         tile_col.alias("tile_col"),
-        F.least(F.col("tile_size"), F.col("width") - tile_col).alias("tile_w"),
-        F.least(F.col("tile_size"), F.col("height") - tile_row).alias("tile_h"),
-        ((tile_row / F.col("stride")).cast("int") * ncols
-         + (tile_col / F.col("stride")).cast("int")).alias("ordinal"),
+        *tile_window(tile_row, tile_col),
         F.col("span.media_ref").alias("media_ref"),
         "transform",
         "tile_size",
@@ -131,7 +131,6 @@ def from_docs(
     keep_classes=DEFAULT_CLASSES,
     salt: int | None = None,
     broadcast_regions: bool | None = None,
-    any_holed: bool | None = None,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline FROM the contract docs table: the user
     hands (docs, raster metadata, truth regions) and gets the enriched
@@ -149,37 +148,10 @@ def from_docs(
     generate candidates; clip decides), so correctness is unchanged —
     res tunes candidate fan-out, not results. res=None picks the
     regime-adaptive default (see PIPELINE_RES_* above)."""
-    if broadcast_regions is None:
-        broadcast_regions = regions.count() <= 500_000
-    if res is None:
-        res = (
-            PIPELINE_RES_BROADCAST if broadcast_regions
-            else PIPELINE_RES_SHUFFLE
-        )
-    res = _resolve_res(regions, res)
-    tiles = tiles_from_docs(docs, rasters)
-    classes = class_map(regions, keep_classes)
-    # class pre-filter BEFORE the stats parse: dropped classes
-    # (Background, out-of-set — ~38% of the synth dim) never pay the
-    # per-row WKT parse, the fattest dim-side stage (round-6 pinned
-    # profile). Result-identical: build_labels dropped them anyway.
-    regions_f = regions.join(
-        F.broadcast(classes.filter(F.col("class_id") >= 0)),
-        "class_name", "inner",
+    return _labels_and_docs(
+        tiles_from_docs(docs, rasters), regions, res, keep_classes, salt,
+        broadcast_regions, derive_tile_refs=False,
     )
-    prepared = prepare_regions(regions_f, res=res)
-    labels = build_labels(
-        tiles, prepared, classes, res=res, salt=salt,
-        broadcast_regions=broadcast_regions, any_holed=any_holed,
-    )
-    docs_out = assemble_docs(tiles, labels)
-    return {
-        "tiles": tiles,
-        "regions_prepared": prepared,
-        "classes": classes,
-        "labels": labels,
-        "docs_out": docs_out,
-    }
 
 
 def align_regions_to_crs(
@@ -220,65 +192,6 @@ def class_map(regions: DataFrame, keep_classes=DEFAULT_CLASSES) -> DataFrame:
     )
 
 
-_EPS64 = 2.220446049250313e-16  # np.finfo(float64).eps
-
-
-_TWO52 = 4503599627370496.0  # 2^52
-
-
-# shared with the general JVM clip path (operators/jvm_clip.py);
-# re-exported here for the rect fast path and the round-trip tests
-_round6_even = jvm_clip.round6_even
-
-
-def _rect_clip_coords() -> Column:
-    """JVM fast path for the clip+normalize of an axis-aligned
-    rectangle region (``is_rect_blccw``) against the tile rect — the
-    whole-stage-codegen replacement for the Arrow clip kernel on the
-    hot path (UDFs are the slow lane; rectangle labels are the
-    dominant case in the contract workload).
-
-    Bit-compatibility with ``geom_udfs.clip_and_normalize``:
-    - intersection corners are the same greatest/least IEEE ops the
-      Sutherland–Hodgman crossings snap to (kernels.py:158);
-    - the vertex ORDER reproduces S-H exactly — BL-start when the
-      region's bottom edge survives, BR-start when it is clipped
-      (property-swept vs the kernel on 2.8k random overlapping
-      rect pairs: 0 mismatches, including empties and the zero-area
-      floor) — the same rule the driver oracle encodes in _q31_sql;
-    - the ring-local zero-area floor (4·n·eps·max(1,ext)², n=5) and
-      np.round's binary HALF_EVEN are mirrored exactly.
-
-    Expects tile bbox (minx/miny/maxx/maxy) and region bbox
-    (g_minx/g_miny/g_maxx/g_maxy) columns; null when the intersection
-    is empty/degenerate (same contract as the kernel)."""
-    ix0 = F.greatest(F.col("g_minx"), F.col("minx"))
-    ix1 = F.least(F.col("g_maxx"), F.col("maxx"))
-    iy0 = F.greatest(F.col("g_miny"), F.col("miny"))
-    iy1 = F.least(F.col("g_maxy"), F.col("maxy"))
-    iw = ix1 - ix0
-    ih = iy1 - iy0
-    m = F.greatest(F.lit(1.0), F.greatest(iw, ih))
-    tol = F.lit(20.0 * _EPS64) * m * m
-    w = F.col("maxx") - F.col("minx")
-    h = F.col("maxy") - F.col("miny")
-
-    def clip01(c: Column) -> Column:
-        return F.greatest(F.lit(0.0), F.least(F.lit(1.0), c))
-
-    uL = _round6_even(clip01((ix0 - F.col("minx")) / w))
-    uR = _round6_even(clip01((ix1 - F.col("minx")) / w))
-    vB = _round6_even(clip01((F.col("maxy") - iy0) / h))
-    vT = _round6_even(clip01((F.col("maxy") - iy1) / h))
-    bl = F.array(uL, vB, uR, vB, uR, vT, uL, vT, uL, vB)
-    br = F.array(uR, vB, uR, vT, uL, vT, uL, vB, uR, vB)
-    nonempty = (ix1 > ix0) & (iy1 > iy0) & (iw * ih > tol)
-    return F.when(
-        nonempty,
-        F.when(F.col("g_miny") >= F.col("miny"), bl).otherwise(br),
-    )
-
-
 def build_labels(
     tiles: DataFrame,
     regions_prepared: DataFrame,
@@ -287,8 +200,6 @@ def build_labels(
     salt: int | None = None,
     broadcast_regions: bool | None = None,
     rect_fast: bool = True,
-    general_jvm: bool = True,
-    any_holed: bool | None = None,
     derive_tile_refs: bool = False,
 ) -> DataFrame:
     """Matched (tile × region) pairs → one label row per kept
@@ -296,10 +207,9 @@ def build_labels(
     normalized to [0,1] tile space (rounded 6 — F5 contract), sparse
     and Background rows dropped (A10/S12 empty-file semantics).
 
-    any_holed=None probes the dim (one limit-1 job) for holed valid
-    geometries to pick the clip plan; a caller that knows its dim
-    (bench loops, production jobs with a stable dim) passes True/False
-    to skip the probe — same hoisting contract as broadcast_regions.
+    rect_fast=False clips every row with the Arrow kernel
+    (geom_udfs.clip_and_normalize) instead of the all-JVM clip arms —
+    the parity oracle the tests compare the default plan against.
 
     derive_tile_refs (guide §2.3 "shuffle fewer bytes", round 6): the
     caller asserts media_ref == tile_media_ref(doc_id, tile_row,
@@ -336,17 +246,15 @@ def build_labels(
     # Plan probe BEFORE the join (dim-side, one cheap limit-1 job):
     # holed geometries need the hole-aware clip (jvm_clip.…_mp, which
     # wants the full nested ring arrays), hole-free ones the cheaper
-    # shell-only paths. Under general_jvm EVERY arm is pure JVM column
-    # math, so the WKT string — the fattest dim column — is always
-    # dead weight after the join and is shed from the carry (shells /
-    # rings arrays replace it); the Arrow kernel remains only as the
-    # general_jvm=False escape hatch / A-B oracle.
-    if any_holed is None:
-        any_holed = not general_jvm or regions_prepared.filter(
-            F.col("is_valid") & F.col("has_holes")
-        ).limit(1).count() > 0
-    any_holed = rect_fast and (any_holed or not general_jvm)
-    if rect_fast and general_jvm and any_holed:
+    # shell-only paths. EVERY arm is pure JVM column math, so the WKT
+    # string — the fattest dim column — is dead weight after the join
+    # and is shed from the carry (shells / rings arrays replace it).
+    # Dropping the probe and always taking the three-way CASE was
+    # measured slower on the hole-free benchmark dim.
+    holed = rect_fast and regions_prepared.filter(
+        F.col("is_valid") & F.col("has_holes")
+    ).limit(1).count() > 0
+    if holed:
         # nested ring arrays, materialized dim-side for holed rows
         # only (the CASE arm keeps hole-free rows from paying the
         # second parse); invalid rows are Backgrounded before the clip
@@ -367,9 +275,7 @@ def build_labels(
     # relation carries them (guide §2.3; the r5 attribution charges
     # this host's non-scaling exactly to hash-relation alloc churn)
     _dead = ("area", "is_empty", "geom_id", "is_valid", "class_name")
-    exclude = (
-        ("geometry", *_dead) if (rect_fast and general_jvm) else _dead
-    )
+    exclude = ("geometry", *_dead) if rect_fast else _dead
     # Class + validity filter moved to the DIM side (guide §2.3
     # "aggregate/filter before you shuffle", round 6): every label row
     # ultimately passes class_id >= 0 — i.e. the region is valid AND
@@ -396,7 +302,7 @@ def build_labels(
         # `>= 0` pair: it kept rows whose is_valid was true OR null
         regions_prepared.filter(F.col("is_valid").isNull() | F.col("is_valid"))
     )
-    if rect_fast and general_jvm:
+    if rect_fast:
         # canonical rectangles never read their shell array (the
         # closed-form rect path wins the CASE) — null it dim-side so
         # the broadcast/shuffle relation stays skinny for the dominant
@@ -442,76 +348,16 @@ def build_labels(
     # (georip/datasets/utils.py:357-371) both moved DIM-side above:
     # class_id arrives attached and every joined row already satisfies
     # class_id >= 0 with a valid geometry
-    labeled = joined
-    kernel_coords = geom_udfs.clip_and_normalize(
-        F.col("geometry"), F.col("minx"), F.col("miny"),
-        F.col("maxx"), F.col("maxy"),
-    )
-    if not rect_fast:
-        labeled = labeled.withColumn("coords", kernel_coords)
+    if rect_fast:
+        # no ArrowEvalPython on the hot stage for any input shape
+        labeled = joined.withColumn(
+            "coords", jvm_clip.clip_coords(holed)
+        ).drop("g_minx", "g_miny", "g_maxx", "g_maxy")
     else:
-        # Canonical rectangles take closed-form column math; every
-        # OTHER hole-free geometry takes the general JVM
-        # Sutherland–Hodgman (jvm_clip — HOFs over the dim-parsed
-        # shell arrays, bit-identical to the kernel, 0/4000 mismatch
-        # property sweep). When no valid region has holes (the
-        # any_holed probe above) the hot stage has NO ArrowEvalPython
-        # at all.
-        # the rect fast path and the S-H trees are built from FIXED
-        # column names, so the (expensive, py4j-built) Columns are
-        # memoized — see exprcache module docstring for the measured
-        # driver-second costs this removes from every re-plan
-        fast = cached_column(("pipeline.rect_clip",), _rect_clip_coords)
-        gen = cached_column(
-            ("pipeline.gen_clip",),
-            lambda: jvm_clip.clip_normalize_coords(
-                F.col("shells"), F.col("minx"), F.col("miny"),
-                F.col("maxx"), F.col("maxy"),
-                g_bbox=(F.col("g_minx"), F.col("g_miny"),
-                        F.col("g_maxx"), F.col("g_maxy")),
-            ),
-        )
-        if not any_holed:
-            labeled = labeled.withColumn(
-                "coords",
-                F.when(F.col("is_rect_blccw"), fast).otherwise(gen),
-            )
-        elif general_jvm:
-            # three-way, ALL JVM: rect column math / hole-free S-H
-            # over shells / holed rows hole-aware S-H over the full
-            # ring arrays (largest |shell|−Σ|holes| part selection,
-            # jvm_clip.clip_normalize_coords_mp) — zero Python on the
-            # hot stage for EVERY input shape.
-            gen_mp = cached_column(
-                ("pipeline.gen_clip_mp",),
-                lambda: jvm_clip.clip_normalize_coords_mp(
-                    F.col("rings"), F.col("minx"), F.col("miny"),
-                    F.col("maxx"), F.col("maxy"),
-                    g_bbox=(F.col("g_minx"), F.col("g_miny"),
-                            F.col("g_maxx"), F.col("g_maxy")),
-                ),
-            )
-            labeled = labeled.withColumn(
-                "coords",
-                F.when(F.col("is_rect_blccw"), fast)
-                .when(~F.col("has_holes"), gen)
-                .otherwise(gen_mp),
-            )
-        else:
-            # general_jvm=False (A/B benchmarking escape hatch /
-            # kernel oracle): rect column math, everything else the
-            # Arrow kernel (geometry masked for rects so Python parses
-            # nothing for them) — the round-3 hybrid plan.
-            masked = geom_udfs.clip_and_normalize(
-                F.when(F.col("is_rect_blccw"), F.lit("POLYGON EMPTY"))
-                .otherwise(F.col("geometry")),
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-            )
-            labeled = labeled.withColumn(
-                "coords",
-                F.when(F.col("is_rect_blccw"), fast).otherwise(masked),
-            )
-        labeled = labeled.drop("g_minx", "g_miny", "g_maxx", "g_maxy")
+        labeled = joined.withColumn("coords", geom_udfs.clip_and_normalize(
+            F.col("geometry"), F.col("minx"), F.col("miny"),
+            F.col("maxx"), F.col("maxy"),
+        ))
     labeled = labeled.drop("shells", "has_holes", "rings")
     labeled = labeled.filter(F.col("coords").isNotNull())
     # drop degenerate clipped slivers: reference prunes sparse
@@ -541,16 +387,17 @@ def assemble_docs(tiles: DataFrame, labels: DataFrame) -> DataFrame:
     doc-keyed left join and one array_sort over the concatenated
     spans — same composite (ordinal, kind_order, class_id, label,
     media_ref) ordering as the old union-then-group shape, row for
-    row. The point of the split: both branches descend from the SAME
-    doc-partitioned scan (build_dataset/from_docs establish
-    hashpartitioning(doc_id) BEFORE the ~100× tile fan-out, and the
-    fan-out, broadcast join and clip all preserve it), so the two
-    aggregations and the join plan with ZERO exchanges — the old
-    union's single groupBy re-shuffled every fanned-out media+label
-    row because a union erases its children's co-partitioning
-    (guide §2.4: share the partitioning established once). Where the
-    inputs are NOT doc-partitioned, Spark inserts the exchanges and
-    the result is unchanged."""
+    row. The split lets a branch whose input is already
+    hash-partitioned by doc_id aggregate with no exchange, where a
+    union erases its children's partitioning (guide §2.4). Neither
+    entry gets that today: in build_dataset both branches shuffle
+    their partial aggregates, because tile_grid round-robins the
+    rasters (see the comment in build_dataset); in from_docs the
+    media branch keeps the doc_id partitioning of the docs ⋈ raster
+    metadata join, but the label branch comes out of the cell join —
+    which round-robins under-parallel tiles and, when the dim is not
+    broadcast, exchanges them by cell key — and shuffles. The result
+    does not depend on the partitioning."""
     media_agg = tiles.select(
         "doc_id",
         F.struct(
@@ -590,7 +437,6 @@ def build_dataset(
     keep_classes=DEFAULT_CLASSES,
     salt: int | None = None,
     broadcast_regions: bool | None = None,
-    any_holed: bool | None = None,
 ) -> dict[str, DataFrame]:
     """The full forward pipeline. Returns every intermediate so tests
     and jobs can tap any stage.
@@ -603,14 +449,6 @@ def build_dataset(
 
     res="auto": data-driven grid resolution; res=None (default) is
     regime-adaptive — see PIPELINE_RES_* and from_docs."""
-    if broadcast_regions is None:
-        broadcast_regions = regions.count() <= 500_000
-    if res is None:
-        res = (
-            PIPELINE_RES_BROADCAST if broadcast_regions
-            else PIPELINE_RES_SHUFFLE
-        )
-    res = _resolve_res(regions, res)
     # Parse the (region, start_year, end_year) join keys from doc_id
     # BEFORE the ~100× tile fan-out: the regexes run once per RASTER
     # row instead of once per tile, and build_labels sees the keys
@@ -621,11 +459,15 @@ def build_dataset(
         rasters_keyed = rasters.select(
             "*", *GF.parse_doc_id(F.col("doc_id"))
         )
-    # Establish doc partitioning BEFORE the fan-out: one cheap shuffle
-    # of the compact raster rows replaces the post-fan-out shuffle of
-    # every media+label row — tile_grid's Generate chain, the
-    # broadcast join and the clip all preserve hashpartitioning, so
-    # assemble_docs' two aggregations and doc join need no exchange.
+    # The doc_id repartition was meant to carry doc partitioning
+    # through the fan-out, so that assemble_docs would need no
+    # exchange. It does not. Under AQE, tile_grid's
+    # rasters.rdd.getNumPartitions() runs this shuffle as a job of its
+    # own and sees the coalesced partition count (1 at 1000 docs on
+    # local[4]), so tile_grid round-robins to 4·par; Catalyst collapses
+    # the two repartitions into that round-robin, and assemble_docs
+    # shuffles its partial aggregates by doc_id after all (~2.3 MB at
+    # 1000 docs × 3 polygons).
     rasters_keyed = rasters_keyed.repartition(F.col("doc_id"))
     # keep= carries the keys through the fan-out select, so the parse
     # really does run once per raster — without it build_labels hits
@@ -634,8 +476,39 @@ def build_dataset(
     tiles = tile_grid(
         rasters_keyed, keep=("region", "start_year", "end_year")
     )
+    return _labels_and_docs(
+        tiles, regions, res, keep_classes, salt, broadcast_regions,
+        derive_tile_refs=True,
+    )
+
+
+def _labels_and_docs(
+    tiles: DataFrame,
+    regions: DataFrame,
+    res: int | str | None,
+    keep_classes,
+    salt: int | None,
+    broadcast_regions: bool | None,
+    derive_tile_refs: bool,
+) -> dict[str, DataFrame]:
+    """The pipeline after tiling, shared by build_dataset and
+    from_docs: dim-side decisions (broadcast from the real region
+    count, regime-adaptive or auto res), class pre-filter, region
+    prep, labels, assembly. Calls the layer functions through this
+    module's namespace, so wrapping ``pipeline.<name>`` sees them."""
+    if broadcast_regions is None:
+        broadcast_regions = regions.count() <= 500_000
+    if res is None:
+        res = (
+            PIPELINE_RES_BROADCAST if broadcast_regions
+            else PIPELINE_RES_SHUFFLE
+        )
+    res = _resolve_res(regions, res)
     classes = class_map(regions, keep_classes)
-    # class pre-filter before the WKT stats parse — see from_docs
+    # class pre-filter BEFORE the stats parse: dropped classes
+    # (Background, out-of-set — ~38% of the synth dim) never pay the
+    # per-row WKT parse, the fattest dim-side stage (round-6 pinned
+    # profile). Result-identical: build_labels dropped them anyway.
     regions_f = regions.join(
         F.broadcast(classes.filter(F.col("class_id") >= 0)),
         "class_name", "inner",
@@ -643,14 +516,13 @@ def build_dataset(
     prepared = prepare_regions(regions_f, res=res)
     labels = build_labels(
         tiles, prepared, classes, res=res, salt=salt,
-        broadcast_regions=broadcast_regions, any_holed=any_holed,
-        derive_tile_refs=True,
+        broadcast_regions=broadcast_regions,
+        derive_tile_refs=derive_tile_refs,
     )
-    docs_out = assemble_docs(tiles, labels)
     return {
         "tiles": tiles,
         "regions_prepared": prepared,
         "classes": classes,
         "labels": labels,
-        "docs_out": docs_out,
+        "docs_out": assemble_docs(tiles, labels),
     }

@@ -88,15 +88,11 @@ spark = georip_spark.get_spark(
 )
 spark.sparkContext.setLogLevel("ERROR")
 bcast = n_regions <= 500_000   # the engine's dim-size rule, hoisted
-from georip_spark.operators.joins import prepare_regions
-holed = (prepare_regions(spark.read.parquet(inp + "/regions"))
-         .filter("is_valid AND has_holes").limit(1).count() > 0)
 
 def run():
     rasters = spark.read.parquet(inp + "/rasters")
     regions = spark.read.parquet(inp + "/regions")
-    out = build_dataset(rasters, regions, broadcast_regions=bcast,
-                        any_holed=holed)
+    out = build_dataset(rasters, regions, broadcast_regions=bcast)
     t0 = time.time()
     r = out["docs_out"].selectExpr("count(*) c", "sum(size(spans)) s").collect()[0]
     return int(r["s"]), time.time() - t0

@@ -55,9 +55,6 @@ spark = georip_spark.get_spark(
     f"prof-{cores}", master=f"local[{cores}]", extra_conf=conf,
 )
 spark.sparkContext.setLogLevel("ERROR")
-from georip_spark.operators.joins import prepare_regions
-holed = (prepare_regions(spark.read.parquet(inp + "/regions"))
-         .filter("is_valid AND has_holes").limit(1).count() > 0)
 rw = synth.synth_rasters(spark, 1000)
 gw = synth.synth_regions(spark, rw, polys_per_doc=3)
 build_dataset(rw, gw, broadcast_regions=True)["docs_out"].selectExpr(
@@ -73,8 +70,7 @@ seen = {s["stageId"] for s in stages()}
 
 rasters = spark.read.parquet(inp + "/rasters")
 regions = spark.read.parquet(inp + "/regions")
-out = build_dataset(rasters, regions, broadcast_regions=n_regions <= 500_000,
-                    any_holed=holed)
+out = build_dataset(rasters, regions, broadcast_regions=n_regions <= 500_000)
 t0 = time.time()
 r = out["docs_out"].selectExpr("count(*) c", "sum(size(spans)) s").collect()[0]
 wall = time.time() - t0

@@ -280,9 +280,12 @@ class TestPlanShape:
         assert plan.count("ArrowEvalPython") == 0
 
     def test_holed_regions_stay_jvm(self, spark):
-        """A polygon WITH a hole routes through the hole-aware JVM
-        clip (clip_normalize_coords_mp) — NO Arrow node anywhere in
-        the plan — and produces the kernel's hole-aware selection."""
+        """With a holed region in the dim, one build_labels plan runs
+        all three clip arms: the holed polygon takes the hole-aware
+        JVM clip (clip_normalize_coords_mp), the canonical rectangle
+        the closed-form rect path, the triangle and the two-part
+        multipolygon the hole-free S-H. NO Arrow node anywhere in the
+        plan, and every label equals the kernel's."""
         from georip_spark.operators.joins import prepare_regions
         from georip_spark.pipeline import build_labels, class_map
         from georip_spark.operators.tiling import tile_grid
@@ -294,17 +297,30 @@ class TestPlanShape:
             "stride int, transform map<string,double>",
         )
         regions = spark.createDataFrame(
-            [("R1", 2019, 2020, "Treatment",
-              "POLYGON ((10 10, 100 10, 100 100, 10 100, 10 10), "
-              "(40 40, 60 40, 60 60, 40 60, 40 40))")],
+            [("R1", 2019, 2020, "Treatment", w) for w in (
+                "POLYGON ((10 10, 100 10, 100 100, 10 100, 10 10), "
+                "(40 40, 60 40, 60 60, 40 60, 40 40))",
+                # canonical BL-start CCW rectangle across two tiles
+                "POLYGON ((50 70, 120 70, 120 90, 50 90, 50 70))",
+                # hole-free triangle across two tiles
+                "POLYGON ((5 5, 120 5, 60 50, 5 5))",
+                # two parts, each in a tile of its own
+                "MULTIPOLYGON (((10 70, 30 70, 30 80, 10 70)), "
+                "((70 10, 100 10, 100 40, 70 40, 70 10)))",
+            )],
             "region string, start_year int, end_year int, "
             "class_name string, geometry string",
         )
         tiles = tile_grid(rasters)
         prep = prepare_regions(regions)
+        # one dim row per clip arm: holed, rectangle, two hole-free
+        kinds = prep.select("has_holes", "is_rect_blccw").collect()
+        assert sorted(map(tuple, kinds)) == [
+            (False, False), (False, False), (False, True), (True, False)
+        ]
         labels = build_labels(tiles, prep, class_map(regions))
         rows = labels.select("media_ref", "label").collect()
-        assert len(rows) > 0
+        assert len(rows) >= 8
         plan = labels._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan  # holed rows clip JVM-side too
 

@@ -183,20 +183,6 @@ def test_broadcast_join_same_result(spark, tiny, engine_out):
     )
 
 
-def test_any_holed_hoist_same_result(spark, tiny, engine_out):
-    """any_holed=True/False (the hoisted clip-plan decision, same
-    contract as broadcast_regions) must be result-invariant: the synth
-    corpus is hole-free, so False selects the all-JVM plan the probe
-    would pick, and True forces the three-way hybrid with the masked
-    Arrow kernel — both bit-identical to the default probed plan."""
-    rasters, regions = tiny
-    for forced in (False, True):
-        got = build_dataset(rasters, regions, any_holed=forced)
-        assert spans_from_engine(got["docs_out"]) == spans_from_engine(
-            engine_out["docs_out"]
-        ), f"any_holed={forced} changed the output"
-
-
 def test_from_docs_parity(spark, tiny, engine_out):
     """Contract input path: driving the pipeline FROM the docs table
     (posexplode media spans -> parse windows -> rebuild footprints)
@@ -232,6 +218,35 @@ def test_auto_res_same_result(spark, tiny, engine_out):
     assert spans_from_engine(coarser["docs_out"]) == spans_from_engine(
         engine_out["docs_out"]
     )
+
+
+def test_entries_call_each_layer_once(spark, tiny, monkeypatch):
+    """build_dataset and from_docs reach every layer through the
+    pipeline module's namespace, once each: wrapping those module
+    attributes is how per-layer tracing attributes time, so a refactor
+    that calls a layer directly, twice or not at all must fail here."""
+    from collections import Counter
+
+    from georip_spark import pipeline
+
+    rasters, regions = tiny
+    docs = synth.synth_docs(spark, rasters)
+    calls = Counter()
+    layers = ("tile_grid", "tiles_from_docs", "prepare_regions",
+              "spatial_join_tiles_regions", "build_labels", "assemble_docs")
+    for name in layers:
+        def counted(*args, _fn=getattr(pipeline, name), _name=name, **kw):
+            calls[_name] += 1
+            return _fn(*args, **kw)
+
+        monkeypatch.setattr(pipeline, name, counted)
+    shared = {"prepare_regions": 1, "spatial_join_tiles_regions": 1,
+              "build_labels": 1, "assemble_docs": 1}
+    pipeline.build_dataset(rasters, regions)
+    assert calls == Counter(tile_grid=1, **shared)
+    calls.clear()
+    pipeline.from_docs(docs, rasters, regions)
+    assert calls == Counter(tiles_from_docs=1, **shared)
 
 
 def test_tiles_from_docs_respects_doc_table(spark, tiny):
@@ -298,7 +313,7 @@ class TestRectFastPath:
     def test_round6_even_matches_numpy(self, spark):
         import numpy as np
 
-        from georip_spark.pipeline import _round6_even
+        from georip_spark.operators.jvm_clip import round6_even
 
         rng = np.random.default_rng(3)
         vals = np.concatenate([
@@ -308,6 +323,6 @@ class TestRectFastPath:
         ])
         df = spark.createDataFrame([(float(v),) for v in vals], "x double")
         got = [r["r"] for r in
-               df.select(_round6_even(F.col("x")).alias("r")).collect()]
+               df.select(round6_even(F.col("x")).alias("r")).collect()]
         want = np.round(vals, 6)
         assert all(g == w for g, w in zip(got, want))
